@@ -218,9 +218,7 @@ def _cosine_topk(spark, sf):
     from image_search_indexing_spark.operators.similarity import cosine_topk
 
     emb = _t(spark, sf, "embeddings")
-    return cosine_topk(
-        emb.where(F.col("vec_id") < 16), emb.where(F.col("vec_id") >= 16), k=5, dim=64
-    )
+    return cosine_topk(emb.where(F.col("vec_id") < 16), emb.where(F.col("vec_id") >= 16), k=5)
 
 
 def _ann_topk_lsh(spark, sf):

@@ -23,6 +23,11 @@ model ``spans: array<struct<kind,text,media_ref,offset>>``:
   media span on that page gets the reference's empty-string caption and a
   ``caption_truncated`` mark (the counter analog of the skip).
 
+The admission rule (kind dispatch, ref rewrite, extension gate, J4,
+URL-length drop, URL keys) lives once, in ``_ref_url`` and ``_admit``;
+the batch, frontier and streaming extractors differ only in how they
+explode spans and how they phrase the J4 predicate.
+
 Everything is built-in Column expressions — single scan, no UDFs, no
 shuffle except the per-doc window sort (partition key ``doc_id``), which at
 100 TB stays healthy because doc_id is high-cardinality and spans/doc are
@@ -33,58 +38,17 @@ scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import urls as U
 
+MEDIA_KINDS = ("img", "a", "css")
 # ImageInformationExtractor.java:43 IMAGE_FILE_EXTENSIONS
 IMAGE_FILE_EXTENSIONS = ["jpg", "jpeg", "png", "tif", "tiff", "gif", "svg", "webp", "bmp", "ico"]
 MAX_IMAGE_IN_HTML = 10_000  # ImageInformationExtractor.java:71
 MAX_URL_LENGTH = 10_000  # ImageInformationExtractor.java:64 MAX_IMAGE_FIELD_SIZE
-
-
-def explode_spans(docs: DataFrame, meta: DataFrame, spans_cap: int = MAX_IMAGE_IN_HTML) -> DataFrame:
-    """documents ⋈ docmeta → one row per span, with per-doc caption context.
-
-    Returns every span (text and media); media rows carry ``caption`` from
-    the nearest-non-empty-text scan. The join with docmeta broadcasts when
-    small; at scale both sides are co-partitioned on doc_id by the writer.
-    """
-    extra = [c for c in ("base_url", "fetch_ts") if c in docs.columns]
-    capped = docs.select(
-        "doc_id", *extra,
-        F.slice("spans", 1, spans_cap).alias("spans"), F.size("spans").alias("n_spans_raw"),
-    )
-    exploded = (
-        (capped.join(meta, "doc_id") if meta is not None else capped)
-        .select(
-            "doc_id",
-            "base_url",
-            "fetch_ts",
-            "n_spans_raw",
-            F.posexplode("spans").alias("span_idx", "span"),
-        )
-        .select(
-            "doc_id",
-            "base_url",
-            "fetch_ts",
-            "n_spans_raw",
-            "span_idx",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
-        )
-    )
-
-    is_text = (F.col("kind") == "text") & (F.trim(F.coalesce(F.col("text"), F.lit(""))) != "")
-    txt = F.when(is_text, F.struct(F.col("offset"), F.trim("text").alias("text")))
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    prev_t = F.last(txt, ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, -1))
-    next_t = F.first(txt, ignorenulls=True).over(w.rowsBetween(1, Window.unboundedFollowing))
-    return exploded.withColumn("prev_text", prev_t).withColumn("next_text", next_t)
 
 
 def _capped_docs(docs: DataFrame, spans_cap: int) -> DataFrame:
@@ -97,17 +61,12 @@ def _capped_docs(docs: DataFrame, spans_cap: int) -> DataFrame:
     )
 
 
-def _explode_spans_nocaption(
-    docs: DataFrame, meta: DataFrame, spans_cap: int, capped: DataFrame | None = None
-) -> DataFrame:
-    """explode_spans minus the caption-context windows (frontier fast path:
-    media rows only need url/kind/offset, so the per-doc sort is skipped).
+def _explode(capped: DataFrame, meta: DataFrame | None) -> DataFrame:
+    """One row per capped span: (doc_id, base_url, fetch_ts, n_spans_raw,
+    span_idx, kind, text, media_ref, offset).
 
-    ``meta=None`` means docs already carries base_url/fetch_ts (pre-joined
-    single-scan input, e.g. docspans.interleaved_from_documents).
-    ``capped`` lets the caller pre-build (and observe) the capped frame."""
-    if capped is None:
-        capped = _capped_docs(docs, spans_cap)
+    ``meta=None`` means ``capped`` already carries base_url/fetch_ts
+    (pre-joined single-scan input, e.g. docspans.interleaved_from_documents)."""
     return (
         (capped.join(meta, "doc_id") if meta is not None else capped)
         .select(
@@ -116,15 +75,74 @@ def _explode_spans_nocaption(
         )
         .select(
             "doc_id", "base_url", "fetch_ts", "n_spans_raw", "span_idx",
-            F.col("span.kind").alias("kind"),
-            F.col("span.text").alias("text"),
-            F.col("span.media_ref").alias("media_ref"),
-            F.col("span.offset").alias("offset"),
+            "span.kind", "span.text", "span.media_ref", "span.offset",
         )
     )
 
 
-def _caption() -> "F.Column":
+def explode_spans(docs: DataFrame, meta: DataFrame, spans_cap: int = MAX_IMAGE_IN_HTML) -> DataFrame:
+    """documents ⋈ docmeta → one row per span, with per-doc caption context.
+
+    Returns every span (text and media) plus ``prev_text``/``next_text``,
+    the nearest non-empty text span on each side by offset (two windows on
+    one ``doc_id`` sort). The join with docmeta broadcasts when small; at
+    scale both sides are co-partitioned on doc_id by the writer.
+    """
+    exploded = _explode(_capped_docs(docs, spans_cap), meta)
+    is_text = (F.col("kind") == "text") & (F.trim(F.coalesce(F.col("text"), F.lit(""))) != "")
+    txt = F.when(is_text, F.struct(F.col("offset"), F.trim("text").alias("text")))
+    w = Window.partitionBy("doc_id").orderBy("offset")
+    prev_t = F.last(txt, ignorenulls=True).over(w.rowsBetween(Window.unboundedPreceding, -1))
+    next_t = F.first(txt, ignorenulls=True).over(w.rowsBetween(1, Window.unboundedFollowing))
+    return exploded.withColumn("prev_text", prev_t).withColumn("next_text", next_t)
+
+
+def _ref_url(base_url: Column, media_ref: Column) -> Column:
+    """Candidate URL of a media ref: an inline ``data:`` ref becomes a
+    synthetic ``hash:`` URL keyed by the md5 of the data URL (F8); any
+    other ref is resolved against the page URL."""
+    return F.when(
+        media_ref.startswith("data:"), F.concat(F.lit("hash:"), F.md5(media_ref))
+    ).otherwise(U.resolve_url(base_url, media_ref))
+
+
+def _parsed_on_page() -> Column:
+    """J4 predicate for exploded batch frames: the row's ``ref_url`` was
+    also parsed from an img/a span of the same document."""
+    parsed = F.when(F.col("kind").isin("img", "a"), F.lit(1)).otherwise(F.lit(0))
+    return F.max(parsed).over(Window.partitionBy("doc_id", "ref_url")) == 1
+
+
+def _admit(refs: DataFrame, css_dup: Column, max_url_length: int) -> DataFrame:
+    """The one admission rule over rows carrying kind/media_ref/ref_url/
+    fetch_ts: adds ``ext``, ``drop_reason`` (null = admitted) and the URL
+    keys ``surt``/``url_hash``/``host``/``page_ts``.
+
+    ``css_dup`` is the J4 "already parsed from an img/a span of this page"
+    predicate. Batch callers pass the window form (``_parsed_on_page``);
+    the streaming caller passes an ``array_contains`` over the page's
+    parsed refs, since streaming allows no non-time windows.
+    """
+    kind = F.col("kind")
+    ext = F.lower(F.regexp_extract("ref_url", r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
+    drop_reason = (
+        F.when(~kind.isin(*MEDIA_KINDS), F.lit("not_media"))
+        .when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
+        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
+        .when((kind == "a") & ~F.col("ext").isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
+        .when((kind == "css") & css_dup, F.lit("css_already_parsed"))
+    )
+    return (
+        refs.withColumn("ext", ext)
+        .withColumn("drop_reason", drop_reason)
+        .withColumn("surt", U.surt(F.col("ref_url")))
+        .withColumn("url_hash", U.url_hash(F.col("surt")))
+        .withColumn("host", U.url_host(F.col("ref_url")))
+        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
+    )
+
+
+def _caption() -> Column:
     """Nearest-non-empty-text caption with sibling fallback (F11 analog)."""
     off = F.col("offset")
     pd_ = off - F.col("prev_text.offset")
@@ -159,10 +177,9 @@ def extract_refs(
     ``where(drop_reason IS NULL)`` — kept in-frame so one scan also feeds
     the counters aggregation (reference A12).
 
-    ``features='frontier'`` skips the text-feature columns (caption
-    neighborhoods, URL/filename tokens) that only the indexer output needs —
-    the frontier loop then runs without the per-doc caption windows and the
-    tokenization regexes, which dominate the scan otherwise.
+    ``features='frontier'`` returns the refs of ``extract_refs_frontier``:
+    media rows only, without the caption neighborhoods and URL/filename
+    tokens that only the indexer output needs.
 
     ``caption_page_budget`` (full mode only): deterministic analog of the
     reference's per-page caption guard (``ImageInformationExtractor.java:
@@ -175,59 +192,10 @@ def extract_refs(
     the reference's budget is wall-clock/heap, which fixtures never hit.
     """
     if features == "frontier":
-        spans = _explode_spans_nocaption(docs, meta, spans_cap)
-    else:
-        spans = explode_spans(docs, meta, spans_cap)
-
-    is_media = F.col("kind").isin("img", "a", "css")
-    resolved = U.resolve_url(F.col("base_url"), F.col("media_ref"))
-    is_data = F.col("media_ref").startswith("data:")
-    # F8: inline data:image → synthetic hash: URL keyed by md5 of the data URL
-    ref_url = F.when(is_data, F.concat(F.lit("hash:"), F.md5(F.col("media_ref")))).otherwise(resolved)
-    ext = F.lower(F.regexp_extract(ref_url, r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
-
-    enriched = spans.withColumn("ref_url", ref_url).withColumn("ext", ext)
-
-    # J4: a css-found URL is dropped when the same resolved URL was already
-    # parsed from an img/a span of the same document.
-    w_doc_url = Window.partitionBy("doc_id", "ref_url")
-    parsed_elsewhere = F.max(
-        F.when(F.col("kind").isin("img", "a"), F.lit(1)).otherwise(F.lit(0))
-    ).over(w_doc_url)
-
-    drop_reason = (
-        F.when(~is_media, F.lit("not_media"))
-        .when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
-        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
-        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
-        .when((F.col("kind") == "css") & (parsed_elsewhere == 1), F.lit("css_already_parsed"))
-    )
-
-    out = (
-        enriched.withColumn("drop_reason", drop_reason)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
-        .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_url", F.col("base_url"))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
-    )
-    core = [
-        "doc_id",
-        "kind",
-        "span_idx",
-        "offset",
-        "ref_url",
-        "surt",
-        "url_hash",
-        "host",
-        "ext",
-        "page_url",
-        "page_ts",
-        "fetch_ts",
-        "drop_reason",
-    ]
-    if features == "frontier":
-        return out.select(*core)
+        return extract_refs_frontier(docs, meta, spans_cap, max_url_length)[0]
+    spans = explode_spans(docs, meta, spans_cap)
+    spans = spans.withColumn("ref_url", _ref_url(F.col("base_url"), F.col("media_ref")))
+    out = _admit(spans, _parsed_on_page(), max_url_length)
     # a media span's `text` field carries the tag's alt/title attribute
     # (the span model's F12 attribute scavenging); empty → NULL, matching
     # the reference's absent-attribute behavior (PageImageData.java:397-399
@@ -244,6 +212,7 @@ def extract_refs(
             .orderBy("span_idx")
             .rowsBetween(Window.unboundedPreceding, -1)
         )
+        is_media = F.col("kind").isin(*MEDIA_KINDS)
         cost = F.when(is_media, F.coalesce(F.length("caption"), F.lit(0))).otherwise(F.lit(0))
         prior = F.coalesce(F.sum(cost).over(w_budget), F.lit(0))
         truncated = is_media & (prior > F.lit(caption_page_budget))
@@ -260,16 +229,10 @@ def extract_refs(
         .withColumn("page_url_tokens", U.url_tokens(F.col("base_url")))
     )
     return out.select(
-        *core[:-1],
-        "caption",
-        "img_alt",
-        "page_surt",
-        "page_host",
-        "img_src_tokens",
-        "img_filename_tokens",
-        "page_url_tokens",
-        *guard_cols,
-        "drop_reason",
+        "doc_id", "kind", "span_idx", "offset", "ref_url", "surt", "url_hash", "host",
+        "ext", F.col("base_url").alias("page_url"), "page_ts", "fetch_ts", "caption",
+        "img_alt", "page_surt", "page_host", "img_src_tokens", "img_filename_tokens",
+        "page_url_tokens", *guard_cols, "drop_reason",
     )
 
 
@@ -302,10 +265,9 @@ def extract_refs_frontier(
     # evaluates lambda HOFs interpreted (no codegen) and duplicated the
     # transform during projection collapse. The exploded + window plan stays
     # fully inside whole-stage codegen except the one window exchange.
-    capped = _capped_docs(docs, spans_cap)
     obs_docs = Observation()
-    media_kinds = F.array(F.lit("img"), F.lit("a"), F.lit("css"))
-    capped = capped.observe(
+    media_kinds = F.array(*[F.lit(k) for k in MEDIA_KINDS])
+    capped = _capped_docs(docs, spans_cap).observe(
         obs_docs,
         F.count(F.lit(1)).alias("pages"),
         # spans.kind projects the struct field out of the array (codegen'd);
@@ -316,37 +278,15 @@ def extract_refs_frontier(
         F.count(F.when(F.col("n_spans_raw") > spans_cap, 1)).alias("pages_span_capped"),
         F.sum(F.greatest(F.col("n_spans_raw") - spans_cap, F.lit(0))).alias("spans_not_parsed"),
     )
-    exploded = _explode_spans_nocaption(docs, meta, spans_cap, capped=capped)
     obs_spans = Observation()
-    exploded = exploded.observe(obs_spans, F.count(F.lit(1)).alias("spans_total"))
+    exploded = _explode(capped, meta).observe(obs_spans, F.count(F.lit(1)).alias("spans_total"))
 
-    media = exploded.where(F.col("kind").isin("img", "a", "css"))
-    resolved = U.resolve_url(F.col("base_url"), F.col("media_ref"))
-    is_data = F.col("media_ref").startswith("data:")
-    ref_url = F.when(is_data, F.concat(F.lit("hash:"), F.md5(F.col("media_ref")))).otherwise(resolved)
-    ext = F.lower(F.regexp_extract(ref_url, r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
-    enriched = media.withColumn("ref_url", ref_url).withColumn("ext", ext)
-
-    w_doc_url = Window.partitionBy("doc_id", "ref_url")
-    parsed_elsewhere = F.max(
-        F.when(F.col("kind").isin("img", "a"), F.lit(1)).otherwise(F.lit(0))
-    ).over(w_doc_url)
-    drop_reason = (
-        F.when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
-        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
-        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
-        .when((F.col("kind") == "css") & (parsed_elsewhere == 1), F.lit("css_already_parsed"))
+    media = exploded.where(F.col("kind").isin(*MEDIA_KINDS)).withColumn(
+        "ref_url", _ref_url(F.col("base_url"), F.col("media_ref"))
     )
-    refs = (
-        enriched.withColumn("drop_reason", drop_reason)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
-        .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
-        .select(
-            "doc_id", "kind", "span_idx", "offset", "ref_url", "surt",
-            "url_hash", "host", "ext", "page_ts", "drop_reason",
-        )
+    refs = _admit(media, _parsed_on_page(), max_url_length).select(
+        "doc_id", "kind", "span_idx", "offset", "ref_url", "surt",
+        "url_hash", "host", "ext", "page_ts", "drop_reason",
     )
     obs_media = Observation()
     reason = lambda r: F.count(F.when(F.col("drop_reason") == r, 1)).alias(r)
@@ -359,9 +299,7 @@ def extract_refs_frontier(
         obs_media,
         F.count(F.lit(1)).alias("media_total"),
         F.count(F.when(valid, 1)).alias("valid_ref"),
-        branch("img"),
-        branch("a"),
-        branch("css"),
+        *[branch(k) for k in MEDIA_KINDS],
         F.count(F.when(valid & F.col("ref_url").startswith("hash:"), 1)).alias("data_url_refs"),
         reason("empty_ref"),
         reason("url_too_long"),
@@ -386,62 +324,30 @@ def extract_refs_streaming(
 
     ``stream`` columns: doc_id, spans, base_url, fetch_ts.
     """
-    base = F.col("base_url")
-
-    def ref_of(s):
-        mr = s["media_ref"]
-        return F.when(
-            mr.startswith("data:"), F.concat(F.lit("hash:"), F.md5(mr))
-        ).otherwise(U.resolve_url(base, mr))
-
     capped = stream.select(
         "doc_id", "base_url", "fetch_ts", F.slice("spans", 1, spans_cap).alias("spans")
     )
     refs_arr = F.transform(
-        F.filter(F.col("spans"), lambda s: s["kind"] != "text"),
+        F.filter(F.col("spans"), lambda s: s["kind"].isin(*MEDIA_KINDS)),
         lambda s: F.struct(
             s["kind"].alias("kind"),
             s["media_ref"].alias("media_ref"),
             s["offset"].alias("offset"),
-            ref_of(s).alias("ref_url"),
+            _ref_url(F.col("base_url"), s["media_ref"]).alias("ref_url"),
         ),
     )
     staged = capped.select("doc_id", "fetch_ts", refs_arr.alias("__refs"))
+    # non-null only: array_contains over an array holding a NULL returns
+    # NULL instead of false for a miss
     parsed = F.transform(
         F.filter(F.col("__refs"), lambda r: r["kind"].isin("img", "a") & r["media_ref"].isNotNull()),
         lambda r: r["ref_url"],
     )
-    staged = staged.select("doc_id", "fetch_ts", "__refs", parsed.alias("__parsed"))
     exploded = staged.select(
-        "doc_id", "fetch_ts", "__parsed", F.explode("__refs").alias("s")
+        "doc_id", "fetch_ts", parsed.alias("__parsed"), F.explode("__refs").alias("s")
     ).select("doc_id", "fetch_ts", "__parsed", "s.*")
-
-    ext = F.lower(F.regexp_extract(F.col("ref_url"), r"\.([A-Za-z0-9]+)(?:[?#].*)?$", 1))
-    css_dup = (F.col("kind") == "css") & F.array_contains(F.col("__parsed"), F.col("ref_url"))
-    drop_reason = (
-        F.when(F.col("media_ref").isNull() | (F.trim("media_ref") == ""), F.lit("empty_ref"))
-        .when(F.length("ref_url") > max_url_length, F.lit("url_too_long"))
-        .when((F.col("kind") == "a") & ~ext.isin(IMAGE_FILE_EXTENSIONS), F.lit("a_not_image"))
-        .when(css_dup, F.lit("css_already_parsed"))
-    )
-    return (
-        exploded.withColumn("drop_reason", drop_reason)
-        .withColumn("ext", ext)
-        .withColumn("surt", U.surt(F.col("ref_url")))
-        .withColumn("url_hash", U.url_hash(F.col("surt")))
-        .withColumn("host", U.url_host(F.col("ref_url")))
-        .withColumn("page_ts", U.parse_archive_ts(F.col("fetch_ts")))
-        .select(
-            "doc_id", "kind", "offset", "ref_url", "surt",
-            "url_hash", "host", "ext", "page_ts", "drop_reason",
-        )
-    )
-
-
-def extraction_counters(refs: DataFrame) -> DataFrame:
-    """Reference-counter analog (A12): one row per drop_reason + totals."""
-    return (
-        refs.groupBy(F.coalesce("drop_reason", F.lit("valid_ref")).alias("counter"))
-        .agg(F.count("*").alias("value"))
-        .orderBy("counter")
+    css_dup = F.array_contains(F.col("__parsed"), F.col("ref_url"))
+    return _admit(exploded, css_dup, max_url_length).select(
+        "doc_id", "kind", "offset", "ref_url", "surt",
+        "url_hash", "host", "ext", "page_ts", "drop_reason",
     )

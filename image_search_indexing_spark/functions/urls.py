@@ -77,11 +77,6 @@ def url_host(url: Column) -> Column:
     return F.lower(F.regexp_extract(stripped, r"^([^/:]*)", 1))
 
 
-def surt_host(surt_col: Column) -> Column:
-    """Host key from an already-SURTed URL: the ``(...)`` prefix."""
-    return F.regexp_extract(surt_col, r"^(\([^)]*\))", 1)
-
-
 def url_hash(url: Column) -> Column:
     """MD5 hex of the (canonical) URL — the seen-set / dedup key.
 
@@ -118,11 +113,6 @@ def parse_archive_ts(ts: Column) -> Column:
     """
     fixed = F.rpad(F.substring(ts, 1, 14), 14, "0")
     return F.to_timestamp(fixed, "yyyyMMddHHmmss")
-
-
-def format_archive_ts(ts: Column) -> Column:
-    """timestamp -> ``yyyyMMddHHmmss`` (WARCInformationParser.java:45-47)."""
-    return F.date_format(ts, "yyyyMMddHHmmss")
 
 
 def resolve_url(base: Column, ref: Column) -> Column:

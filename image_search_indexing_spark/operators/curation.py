@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import word_shingles, word_tokens
+from ..functions.text import word_tokens
 from ..session import spread
 
 __all__ = [
@@ -88,8 +88,10 @@ def repetition_signals(docs: DataFrame, text_col: str = "text", id_col: str = "d
     2-grams etc.); the dup fractions are 1 - distinct/total over word
     2-/3-grams. Pure projection: tokenization, sort, fold and distinct
     all run as JVM-side higher-order-function expressions (no Python,
-    no explode) — the plan has zero exchanges and survives a 100 TB
-    scan unchanged."""
+    no explode), so the operator adds no exchange of its own. Unlike the
+    dedup and decontamination operators it does not ``spread()`` its
+    input; any round-robin exchange in a composed plan comes from the
+    caller."""
     from ..functions.text import word_shingles_from_tokens
 
     # Tokens staged in their own projection (multi-use alias blocks
@@ -247,8 +249,11 @@ def decontaminate(
     broadcast (eval sets are small by definition — thousands of docs,
     not billions), the training side explodes to grams AFTER the
     semi-side hash set is built, and the per-doc count-distinct gets a
-    map-side partial aggregate. One scan of train, one broadcast, one
-    shuffle (the final per-doc agg)."""
+    map-side partial aggregate. One scan of train and one broadcast.
+    Exchanges: the round-robin ``spread()`` of the train projection (so
+    tokenize/shingle runs at full width on 1-row-group inputs), the
+    benchmark side's distinct grams before the broadcast, and the two of
+    the per-doc count-distinct (by (id, gram), then by id)."""
     # Tokenize in a SEPARATE projection before shingling: the multi-use
     # token alias blocks project-collapse, so the regex tokenize runs once
     # per row instead of once per shingle inside the interpreted HOF

@@ -1,11 +1,17 @@
 """Similarity search over embedding columns (array<float>).
 
-Baseline: brute-force cosine top-k — queries × corpus with the dot
-product as a JVM-side higher-order ``zip_with``/``aggregate`` expression
-(no Python in the hot path); broadcast the (small) query side so the big
-corpus never shuffles. Scale path: LSH bucketing by random-hyperplane
-signs (deterministic seed), so each query only scans its bucket —
-the IVF-style variant a 100 TB corpus needs.
+- ``cosine_topk``: exact brute-force top-k. The query side is collected
+  when the plan is built, and each corpus Arrow batch is scored against
+  it as one BLAS matmul, so the corpus never shuffles before scoring.
+- ``ann_topk_lsh`` / ``ivf_topk``: approximate top-k. Each query meets
+  only its LSH bucket or its nearest IVF lists through a broadcast
+  equi-join, and the few surviving pairs are scored by the JVM-side
+  ``cosine`` fold.
+- ``near_dup_pairs``: near-duplicate pairs formed only inside LSH
+  buckets, each bucket scored as one BLAS matmul.
+
+Hyperplane signatures and IVF centroids come from deterministic seeds,
+so every run and partition count gives the same buckets.
 """
 
 from __future__ import annotations
@@ -17,44 +23,31 @@ from ..functions.hashing import xxhash64
 from ..session import spread
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product of two array<double> columns.
+def dot(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns as a JVM-side HOF fold.
 
-    With ``dim`` given, the fold is UNROLLED into a flat left-associated
-    sum — ``((0.0 + a[0]*b[0]) + a[1]*b[1]) + ...`` — bit-for-bit equal to
-    the HOF fold (identical IEEE addition sequence). Measured caveat that
-    decides which form to use: the ``aggregate``/``zip_with`` higher-order
-    form is CodegenFallback (interpreted per element), but the unrolled
-    64-term expression inflates whole-stage-codegen past the JIT's ~8 KB
-    method limit, so in practice it ran SLOWER in every per-pair hot path
-    tried this round (falls to the bytecode interpreter + seconds of
-    compile). Per-pair kernels at volume belong in a vectorized Arrow
-    batch (see ``near_dup_pairs`` / ``cosine_topk``); the HOF fold is fine
-    for per-row signature/centroid work. The unrolled form is kept for
-    small-dim cases where both costs are negligible.
+    The ``aggregate``/``zip_with`` fold is evaluated interpreted, which is
+    fine for per-row signature/centroid work and for the few pairs the ANN
+    joins keep; per-pair kernels at volume belong in a vectorized Arrow
+    batch (see ``near_dup_pairs`` / ``cosine_topk``).
     """
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + a[i] * b[i]
-        return acc
+    # an unrolled a[0]*b[0] + ... sum was measured slower in every hot path
+    # tried: it pushes whole-stage codegen past the JIT's 8 KB method limit
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
 
 
-def l2norm(a: Column, dim: int | None = None) -> Column:
-    """L2 norm; unrolled (bit-identical fold order) when ``dim`` is given."""
-    if dim is not None:
-        acc = F.lit(0.0)
-        for i in range(dim):
-            acc = acc + a[i] * a[i]
-        return F.sqrt(acc)
+def l2norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (l2norm(a, dim) * l2norm(b, dim))
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (l2norm(a) * l2norm(b))
+
+
+def _id_type(df: DataFrame, id_col: str) -> str:
+    return df.schema[id_col].dataType.simpleString()
 
 
 def cosine_topk(
@@ -63,86 +56,77 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
-    """Brute-force cosine top-k: (query_id, neighbor_id, rank).
+    """Exact cosine top-k: (query_id, neighbor_id, rank).
 
-    The query side is broadcast (it is the small side by construction);
-    ranking ties break by neighbor id for determinism. Vectors are cast
-    to double before arithmetic so results are engine-portable. With
-    ``dim`` the per-pair cosine unrolls into codegen (bit-identical, see
-    ``dot``) and each side's norm is computed once per VECTOR instead of
-    once per pair — the same operand values multiply, so the quotient is
-    unchanged bit-for-bit.
+    The query side is small by contract and is collected EAGERLY, when
+    this function builds the plan, not when the result runs.
+    Each corpus Arrow batch is then scored against it as ONE BLAS matmul
+    (guide §4.2), and only the batch-local top-k per query survives. That
+    is exact: a global top-k row is necessarily batch-local top-k under the
+    SAME (sim DESC, neighbor_id) order. The final window ranks the small
+    union. Vectors are cast to double; ranking ties break by neighbor id;
+    zero-norm vectors have no similarity and rank last. ``query_id`` takes
+    the query side's id type and ``neighbor_id`` the corpus's; an empty
+    query side gives an empty result.
+
+    Float caveat: BLAS sums in a different order than a sequential fold,
+    but the minimum adjacent top-12 sim gap is 1.3e-6 at sf1.0 (5.6e-6..
+    1.9e-5 at smaller SFs) vs ~1e-15 order noise, and the output was
+    verified equal to the DuckDB oracle at every SF.
     """
+    import numpy as np
+    import pandas as pd
+
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).cast("array<double>").alias("cv")
     )
+    schema = f"query_id {_id_type(queries, id_col)}, neighbor_id {_id_type(corpus, id_col)}"
+    qrows = q.collect()
+    if not qrows:
+        return corpus.sparkSession.createDataFrame([], f"{schema}, rank int")
+    qids = np.array([r["query_id"] for r in qrows])
+    Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
+    qn = np.sqrt((Q * Q).sum(axis=1))
+    kk = int(k)
+
+    def _score(it):
+        for pdf in it:
+            nids = pdf["neighbor_id"].to_numpy()
+            C = np.asarray(pdf["cv"].tolist(), dtype=np.float64)
+            cn = np.sqrt((C * C).sum(axis=1))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = (Q @ C.T) / np.outer(qn, cn)
+            out_q, out_n, out_s = [], [], []
+            for i in range(len(qids)):
+                s = sims[i]
+                # non-finite sims (zero-norm vectors) have no similarity:
+                # ordered last here, emitted as NULL below
+                key = np.where(np.isfinite(s), -s, np.inf)
+                order = np.lexsort((nids, key))[:kk]
+                out_q.append(np.full(len(order), qids[i]))
+                out_n.append(nids[order])
+                out_s.append(s[order])
+            s_all = np.concatenate(out_s)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.concatenate(out_q),
+                    "neighbor_id": np.concatenate(out_n),
+                    "sim": pd.array(
+                        np.where(np.isfinite(s_all), s_all, np.nan), dtype="Float64"
+                    ).to_numpy(dtype=object, na_value=None)
+                    if not np.isfinite(s_all).all()
+                    else s_all,
+                }
+            )
+
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    if dim is not None:
-        # Vectorized kernel (guide §4.2): the query block is small by
-        # contract (it was broadcast before; collecting it to build the
-        # scoring matrix is the same driver-bounded transfer), each corpus
-        # Arrow batch is scored as ONE BLAS matmul, and only the
-        # batch-local top-k per query survives — exact, because a global
-        # top-k row is necessarily batch-local top-k under the SAME
-        # (sim DESC, neighbor_id) order. The final window ranks the tiny
-        # union. Float caveat: BLAS sum order differs from the HOF fold,
-        # but the minimum adjacent top-12 sim gap is 1.3e-6 at sf1.0
-        # (5.6e-6..1.9e-5 at smaller SFs) vs ~1e-15 order noise, and the
-        # output was verified equal to the DuckDB oracle at every SF.
-        import numpy as np
-        import pandas as pd
-
-        qrows = q.collect()  # bounded: the query side of a top-k probe
-        qids = np.array([r["query_id"] for r in qrows])
-        Q = np.array([r["qv"] for r in qrows], dtype=np.float64)
-        qn = np.sqrt((Q * Q).sum(axis=1))
-        kk = int(k)
-
-        def _score(it):
-            for pdf in it:
-                nids = pdf["neighbor_id"].to_numpy()
-                C = np.asarray(pdf["cv"].tolist(), dtype=np.float64)
-                cn = np.sqrt((C * C).sum(axis=1))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = (Q @ C.T) / np.outer(qn, cn)
-                out_q, out_n, out_s = [], [], []
-                for i in range(len(qids)):
-                    s = sims[i]
-                    # non-finite sims (zero-norm vectors) mirror the JVM
-                    # path's NULL: ordered last here, emitted as NULL below
-                    key = np.where(np.isfinite(s), -s, np.inf)
-                    order = np.lexsort((nids, key))[:kk]
-                    out_q.append(np.full(len(order), qids[i]))
-                    out_n.append(nids[order])
-                    out_s.append(s[order])
-                s_all = np.concatenate(out_s)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "neighbor_id": np.concatenate(out_n),
-                        "sim": pd.array(
-                            np.where(np.isfinite(s_all), s_all, np.nan), dtype="Float64"
-                        ).to_numpy(dtype=object, na_value=None)
-                        if not np.isfinite(s_all).all()
-                        else s_all,
-                    }
-                )
-
-        id_t = dict((f.name, f.dataType.simpleString()) for f in queries.schema.fields)[id_col]
-        scored = spread(c).mapInPandas(
-            _score, f"query_id {id_t}, neighbor_id {id_t}, sim double"
-        )
-    else:
-        scored = c.crossJoin(F.broadcast(q)).withColumn(
-            "sim", cosine(F.col("qv"), F.col("cv"))
-        )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        spread(c).mapInPandas(_score, f"{schema}, sim double")
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank")
     )
@@ -159,13 +143,8 @@ def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = 
         [1.0 if xxhash64(f"{seed}:{p}:{i}") % 2 == 0 else -1.0 for i in range(dim)]
         for p in range(n_planes)
     ]
-    # Deliberately the HOF fold, NOT an unrolled sum: the signature runs
-    # once per ROW (n_planes·dim work), so interpreted evaluation is cheap
-    # here, while an unrolled n_planes×dim expression (384+ terms at
-    # n_planes=12) bloats codegen past the JIT's method limits and its
-    # compile time dominated small queries (measured: ann_topk_lsh 4.3 s
-    # unrolled vs 1.4 s HOF in-suite). Unrolling pays only in per-PAIR
-    # hot paths (see ``dot``).
+    # the signature runs once per ROW (n_planes·dim work), so the
+    # interpreted HOF fold in ``dot`` is cheap here
     sig = F.lit(0).cast("long")
     for p, coeffs in enumerate(planes):
         arr = F.array(*[F.lit(c) for c in coeffs])
@@ -238,7 +217,6 @@ def ivf_topk(
     nprobe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """IVF-style approximate top-k: (query_id, neighbor_id, rank).
 
@@ -247,12 +225,7 @@ def ivf_topk(
     fraction is nprobe/n_centroids of the corpus — the 100 TB path when
     hyperplane LSH recall is insufficient. With ``nprobe == n_centroids``
     this degenerates to exact brute force (the property the unit test
-    pins against ``cosine_topk``).
-
-    ``broadcast_queries=False`` switches the probe join to a shuffle join
-    partitioned by centroid id — use it when the query set itself is
-    table-sized (≫ broadcast threshold); both sides then co-partition on
-    ``cid`` and no executor holds the full query set.
+    pins against ``cosine_topk``). The query side is broadcast.
     """
     cents = train_ivf_centroids(corpus, dim, n_centroids, id_col=id_col, vec_col=vec_col)
     c = spread(corpus.select(
@@ -261,8 +234,7 @@ def ivf_topk(
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qv")
     ).withColumn("cid", F.explode(_nearest_centroid_ids(F.col("qv"), cents, nprobe)))
-    qside = F.broadcast(q) if broadcast_queries else q
-    scored = c.join(qside, "cid").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    scored = c.join(F.broadcast(q), "cid").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -309,7 +281,7 @@ def near_dup_pairs(
     v = spread(emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v")
     )).withColumn("bucket", sig)
-    id_type = dict((f.name, f.dataType.simpleString()) for f in emb.schema.fields)[id_col]
+    id_type = _id_type(emb, id_col)
     thr = float(threshold)
 
     def _score(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -345,22 +317,17 @@ def ann_topk_lsh(
     n_planes: int = 12,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Approximate top-k: candidates restricted to the query's LSH bucket.
 
-    One equi-join on the signature instead of a cross join — the scan of
-    the corpus partitions by bucket; recall trades off with n_planes.
-    ``broadcast_queries=False`` makes it a shuffle join co-partitioned on
-    the signature for table-sized query sets (query ≫ broadcast threshold).
+    One broadcast equi-join on the signature instead of a cross join;
+    recall trades off with n_planes.
     """
     sig = lambda col: hyperplane_signature(col, dim, n_planes)
-    # Per-pair HOF cosine kept on purpose: the banding means only a few
-    # thousand pairs survive the bucket join, so interpreted evaluation is
-    # cheap, while the unrolled 64-term form was measured SLOWER in-suite
-    # (codegen bloat/compile; same lesson as hyperplane_signature). The
-    # one real cost was the 1-row-group corpus scan serializing the
-    # signature stage — spread() fixes that.
+    # Per-pair HOF cosine: the banding means only a few thousand pairs
+    # survive the bucket join, so interpreted evaluation is cheap. The one
+    # real cost was the 1-row-group corpus scan serializing the signature
+    # stage — spread() fixes that.
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
@@ -369,8 +336,7 @@ def ann_topk_lsh(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("cv"),
     )).withColumn("bucket", sig(F.col("cv")))
-    qside = F.broadcast(q) if broadcast_queries else q
-    scored = c.join(qside, "bucket").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+    scored = c.join(F.broadcast(q), "bucket").withColumn("sim", cosine(F.col("qv"), F.col("cv")))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))

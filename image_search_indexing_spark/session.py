@@ -100,7 +100,7 @@ def get_spark(
     return spark
 
 
-def spread(df, parts: int | None = None):
+def spread(df):
     """Round-robin repartition before CPU-heavy per-row work.
 
     Single-row-group parquet files defeat byte-range splitting: Spark
@@ -115,5 +115,4 @@ def spread(df, parts: int | None = None):
     constant; the exchange is row-count-bounded and tiny next to the
     per-row work it parallelizes.
     """
-    sc = df.sparkSession.sparkContext
-    return df.repartition(parts or sc.defaultParallelism)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

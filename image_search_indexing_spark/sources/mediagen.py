@@ -311,72 +311,17 @@ def synthetic_media_dims_ext(docs: DataFrame, id_col: str = "doc_id") -> DataFra
 # ---------------------------------------------------------------------------
 
 
-def _le2h(col):  # u16 LE hex
-    c = col.cast("int")
-    return F.format_string("%02X%02X", c % 256, (c / 256).cast("int") % 256)
-
-
-_FCC = {"RIFF": "52494646", "AVI ": "41564920", "LIST": "4C495354",
-        "hdrl": "6864726C", "avih": "61766968", "strl": "7374726C",
-        "strh": "73747268", "strf": "73747266", "vids": "76696473",
-        "DIB ": "44494220", "movi": "6D6F7669", "00db": "30306462"}
-
-
-def _avi_container_hex(w, h, nf, upf, frame_body_hex, max_frames: int):
-    """Hex of a one-video-stream AVI (``vids``/``DIB ``, 24-bpp BI_RGB):
-    ``RIFF [LIST hdrl [avih, LIST strl [strh, strf]], LIST movi
-    [00db ...]]``. ``frame_body_hex(f)`` returns the hex of frame f's
-    pixel bytes (length w·h·3; callers keep w ≡ 0 mod 4 so DIB rows need
-    no padding). The header tree is fixed-shape, so its sizes (avih/strh
-    56, strf 40, strl LIST 116, hdrl LIST 192) are spec constants
-    computed ONCE here — the single place the container layout lives."""
-    fs = (w * h * 3).cast("int")  # frame bytes
-    z4, z8 = "00000000", "0000000000000000"
-
-    avih = F.concat(  # 56-byte main header
-        _le8(upf), F.lit(z4 * 3),            # maxbytes, padding, flags
-        _le8(nf), F.lit(z4),                 # total frames, initial
-        _le8(F.lit(1)), F.lit(z4),           # streams = 1, sug. buffer
-        _le8(w), _le8(h), F.lit(z8 * 2),     # width, height, reserved[4]
-    )
-    strh = F.concat(  # 56-byte stream header: fps = rate/scale
-        F.lit(_FCC["vids"] + _FCC["DIB "] + z4 + z4),  # flags, prio+lang
-        F.lit(z4),                           # initial frames
-        _le8(upf), _le8(F.lit(1_000_000)),   # scale, rate
-        F.lit(z4), _le8(nf),                 # start, length
-        _le8(fs), F.lit("FFFFFFFF"), F.lit(z4),  # bufsize, quality -1, samplesize
-        F.lit(z4), _le2h(w), _le2h(h),       # rcFrame
-    )
-    strf = F.concat(  # 40-byte BITMAPINFOHEADER
-        _le8(F.lit(40)), _le8(w), _le8(h),
-        F.lit("0100" + "1800" + z4),         # planes 1, 24bpp, BI_RGB
-        _le8(fs), F.lit(z4 * 4),
-    )
-    strl = F.concat(F.lit(_FCC["strl"] + _FCC["strh"]), _le8(F.lit(56)), strh,
-                    F.lit(_FCC["strf"]), _le8(F.lit(40)), strf)
-    hdrl = F.concat(F.lit(_FCC["hdrl"] + _FCC["avih"]), _le8(F.lit(56)), avih,
-                    F.lit(_FCC["LIST"]), _le8(F.lit(116)), strl)
-
-    def chunk(f: int):
-        c = F.concat(F.lit(_FCC["00db"]), _le8(fs), frame_body_hex(f))
-        return F.when(nf > f, c).otherwise(F.lit(""))
-
-    movi_body = (F.lit(4) + nf * (fs + 8)).cast("int")
-    movi = F.concat(F.lit(_FCC["LIST"]), _le8(movi_body), F.lit(_FCC["movi"]),
-                    *[chunk(f) for f in range(max_frames)])
-    riff_size = (movi_body + 8 + 200 + 4).cast("int")  # 'AVI ' + hdrl + movi
-    return F.concat(F.lit(_FCC["RIFF"]), _le8(riff_size), F.lit(_FCC["AVI "]),
-                    F.lit(_FCC["LIST"]), _le8(F.lit(192)), hdrl, movi)
-
-
 def _le(v: int, n: int) -> bytes:
     return int(v).to_bytes(n, "little")
 
 
 def _avi_container_bytes(w: int, h: int, nf: int, upf: int, frame_body) -> bytes:
-    """Byte twin of ``_avi_container_hex`` (same fixed-shape header tree,
-    same spec constants) for the vectorized Python generators —
-    ``frame_body(f)`` returns frame f's pixel bytes (length w·h·3)."""
+    """Bytes of a one-video-stream AVI (``vids``/``DIB ``, 24-bpp BI_RGB):
+    ``RIFF [LIST hdrl [avih, LIST strl [strh, strf]], LIST movi
+    [00db ...]]``. The header tree is fixed-shape, so its sizes (avih/strh
+    56, strf 40, strl LIST 116, hdrl LIST 192) are spec constants.
+    ``frame_body(f)`` returns frame f's pixel bytes (length w·h·3; callers
+    keep w ≡ 0 mod 4 so DIB rows need no padding)."""
     fs = w * h * 3
     avih = (
         _le(upf, 4) + b"\x00" * 12 + _le(nf, 4) + b"\x00" * 4

@@ -203,7 +203,9 @@ def test_near_dup_pairs_numpy_kernel_equals_hof_filter(spark):
 
 
 def test_cosine_topk_numpy_equals_hof_path(spark):
-    from image_search_indexing_spark.operators.similarity import cosine_topk
+    from pyspark.sql import Window
+
+    from image_search_indexing_spark.operators.similarity import cosine, cosine_topk
 
     rng = np.random.RandomState(11)
     emb = spark.createDataFrame(
@@ -214,10 +216,47 @@ def test_cosine_topk_numpy_equals_hof_path(spark):
     c = emb.where(F.col("vec_id") >= 8)
     fast = {
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in cosine_topk(q, c, k=5, dim=24).collect()
-    }
-    slow = {
-        (r["query_id"], r["neighbor_id"], r["rank"])
         for r in cosine_topk(q, c, k=5).collect()
     }
+    # definitional crossJoin + window twin (the pre-round-6 plan shape)
+    qq = q.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
+    cc = c.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"))
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    slow = {
+        (r["query_id"], r["neighbor_id"], r["rank"])
+        for r in cc.crossJoin(qq)
+        .withColumn("sim", cosine(F.col("qv"), F.col("cv")))
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 5)
+        .collect()
+    }
     assert fast == slow and len(fast) == 8 * 5
+
+
+def test_cosine_topk_empty_query_side(spark):
+    """An empty query side gives an empty result, not a numpy AxisError."""
+    from image_search_indexing_spark.operators.similarity import cosine_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(1, 6)], "vec_id long, embedding array<double>"
+    )
+    out = cosine_topk(emb.where(F.col("vec_id") < 0), emb, k=3)
+    assert out.columns == ["query_id", "neighbor_id", "rank"]
+    assert out.collect() == []
+
+
+def test_cosine_topk_neighbor_id_takes_corpus_type(spark):
+    """neighbor_id is typed from the corpus, not the query side: int query
+    ids against bigint corpus ids beyond 2^31 come back intact."""
+    from image_search_indexing_spark.operators.similarity import cosine_topk
+
+    big = 1 << 40
+    q = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id int, embedding array<double>")
+    c = spark.createDataFrame(
+        [(big + i, [1.0, float(i)]) for i in range(4)], "vec_id bigint, embedding array<double>"
+    )
+    out = cosine_topk(q, c, k=2)
+    assert out.schema["query_id"].dataType.simpleString() == "int"
+    assert out.schema["neighbor_id"].dataType.simpleString() == "bigint"
+    got = [(r["query_id"], r["neighbor_id"], r["rank"]) for r in out.orderBy("rank").collect()]
+    assert got == [(1, big, 1), (1, big + 1, 2)]

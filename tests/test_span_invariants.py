@@ -7,6 +7,7 @@ reassembling, against a pandas read of the same parquet.
 """
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from image_search_indexing_spark.frontier.extract import explode_spans
@@ -43,11 +44,25 @@ def test_span_sequence_equality(spark, corpus, tmpdir_path):
         assert got[row["doc_id"]] == want, row["doc_id"]
 
 
-def test_extraction_is_single_scan_no_python_udf(spark, corpus):
+@pytest.mark.parametrize("entry", ["full", "features_frontier", "extract_refs_frontier"])
+def test_extraction_is_single_scan_no_python_udf(spark, corpus, entry):
     """The extraction plan must stay JVM-side: no BatchEvalPython /
-    ArrowEvalPython nodes (input_hint: no per-row Python; kernels builtin)."""
-    from image_search_indexing_spark.frontier.extract import extract_refs
+    ArrowEvalPython nodes (input_hint: no per-row Python; kernels builtin).
+    The frontier path keeps its documented shape: the J4 window is its
+    only window, and that window's exchange its only shuffle."""
+    from image_search_indexing_spark.frontier import extract as X
 
-    plan = extract_refs(corpus["docs"], corpus["meta"])._jdf.queryExecution().executedPlan().toString()
+    docs, meta = corpus["docs"], corpus["meta"]
+    refs = {
+        "full": lambda: X.extract_refs(docs, meta),
+        "features_frontier": lambda: X.extract_refs(docs, meta, features="frontier"),
+        "extract_refs_frontier": lambda: X.extract_refs_frontier(docs, meta)[0],
+    }[entry]()
+    plan = refs._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
+    if entry != "full":
+        lines = plan.splitlines()
+        shuffles = [ln for ln in lines if "Exchange " in ln and "BroadcastExchange" not in ln]
+        assert len(shuffles) == 1 and "hashpartitioning(doc_id#" in shuffles[0], shuffles
+        assert sum("Window [" in ln for ln in lines) == 1

@@ -48,7 +48,8 @@ def main() -> None:
     cap("minhash_lsh_buckets", qs["minhash_lsh_buckets"](spark, sf),
         "staged token/shingle/signature projections (no re-evaluation).")
     cap("cosine_topk", qs["cosine_topk"](spark, sf),
-        "corpus never shuffles; query side broadcast; JVM-side zip_with dot.")
+        "query side collected at plan build; each corpus Arrow batch scored "
+        "as one BLAS matmul; batch-local top-k, then one window rank.")
     cap("emb_near_dup_pairs", qs["emb_near_dup_pairs"](spark, sf),
         "pairs only inside LSH buckets (no cross join); sim filter JVM-side.")
     cap("simhash_buckets_md5", qs["simhash_buckets_md5"](spark, sf),
